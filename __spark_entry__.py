@@ -359,8 +359,8 @@ def q_cocitation(spark, sf):
 
 def q_host_components(spark, sf):
     """Weakly-connected components of the extracted host graph
-    (webgraph.host_components): min-label propagation over the
-    small-diameter host graph, per-round localCheckpoint; oracle = true
+    (webgraph.host_components): link.connected_components, min-label
+    propagation with a pointer jump to a verified fixpoint; oracle = true
     WCC over the planted link set via a recursive min-label CTE — an
     independent formulation, so a split or merged component fails."""
     return WG.host_components(_pipeline(spark, sf)["pages"])
@@ -1173,24 +1173,12 @@ def q_triple_typecheck(spark, sf):
 
 
 def q_cc_bigstar(spark, sf):
-    """Host-graph connected components via the ALTERNATING large-star /
-    small-star algorithm (link.connected_components_twophase, Kiveris
-    et al. 2014) — O(log n) shuffle rounds regardless of graph DIAMETER,
-    the scale companion to q_host_components' min-label propagation
-    (O(diameter) rounds; right for hub-contracted host graphs, wrong
-    for redirect filaments). Same deterministic output contract
-    (component = min host), so the oracle is the SAME independent
-    recursive-CTE true-WCC the propagation query is graded on — two
-    different distributed algorithms certified against one ground
-    truth."""
-    e = WG.distinct_host_edges(_pipeline(spark, sf)["pages"])
-    edges = e.select(F.col("u").alias("sid_a"), F.col("v").alias("sid_b"))
-    nodes = (
-        e.select(F.col("u").alias("sid")).union(e.select("v")).distinct()
-    )
-    return L.connected_components_twophase(nodes, edges).select(
-        F.col("sid").alias("host"), F.col("label").alias("component")
-    )
+    """Host-graph connected components, kept as a driver query name of
+    its own: the same link.connected_components call as
+    q_host_components (webgraph.host_components), so both are graded
+    against the same independent recursive-CTE true-WCC oracle with the
+    same output contract (component = min host)."""
+    return WG.host_components(_pipeline(spark, sf)["pages"])
 
 
 def q_collocations(spark, sf):
@@ -3487,11 +3475,13 @@ def q_boruvka_msf(spark, sf):
     (webgraph.boruvka_msf, Boruvka 1926 — THE parallel MST algorithm):
     per round every component grabs its cheapest outgoing edge under
     the (w, a, b) total order (components >= halve, O(log n) rounds),
-    merged components contract via a fixed-budget min-label pass;
-    weights are the SSSP link-mass convention. Oracle replays every
-    round; pytest pins the forest == a Python Kruskal ground truth
-    (unique under the total order, so two independent algorithms must
-    agree edge-for-edge)."""
+    merged components contract via link.connected_components (verified
+    fixpoint, raising past its cap); weights are the SSSP link-mass
+    convention. Oracle replays every round, contracting with a fixed
+    MST_CC_ROUNDS budget that agrees with any verified fixpoint the
+    contract graphs reach within it; pytest pins the forest == a
+    Python Kruskal ground truth (unique under the total order, so two
+    independent algorithms must agree edge-for-edge)."""
     return WG.boruvka_msf(_pipeline(spark, sf)["pages"])
 
 

@@ -54,22 +54,6 @@ from {doc_rel} where doc_id % 7 = 3
 """
 
 
-def golden_dup_pairs_sql(doc_rel: str = "documents") -> str:
-    """Ground-truth near-dup pairs (true Jaccard >= tau): all pairs within
-    each planted group {d, d+1e6?, d+2e6?} (DuckDB)."""
-    return f"""
-with members as (
-  select doc_id as gid, doc_id as id from {doc_rel}
-  union all
-  select doc_id, doc_id + {DUP_EXACT_OFF} from {doc_rel} where doc_id % 10 = 0
-  union all
-  select doc_id, doc_id + {DUP_NEAR_OFF} from {doc_rel} where doc_id % 7 = 3
-)
-select a.id as id_a, b.id as id_b
-from members a join members b on a.gid = b.gid and a.id < b.id
-"""
-
-
 # ---------------------------------------------------------------------------
 # shingles (dual dialect)
 # ---------------------------------------------------------------------------
@@ -1674,8 +1658,8 @@ def split_leakage(docs: DataFrame, splits: DataFrame,
     catches the near-dup overlap a hash split silently creates.
 
     Scale shape: rides the SAME certified MinHash->CC machinery as
-    near_dedup_survivors (banded LSH, cap-degraded buckets, per-round
-    localCheckpoint'd CC); splits attach via ONE doc-keyed equi-join;
+    near_dedup_survivors (banded LSH, cap-degraded buckets,
+    link.connected_components); splits attach via ONE doc-keyed equi-join;
     the per-cluster rollup is a map-side-combined agg whose collect_set
     is bounded by |splits| (3), and cluster sizes are bounded by the
     LSH cap degrade — no hot reducer."""

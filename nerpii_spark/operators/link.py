@@ -17,10 +17,12 @@ record-linkage architecture, each stage a distributed DataFrame op:
    cannot separate true initial-variants (min J .57) from sibling names
    like "Robert X. Keller"/"Robert X. Kemp" (max J .63) — measured on the
    planted corpus — hence the token-aware score.
-3. **Connected components** (`connected_components`): GraphFrames-style
-   min-label propagation over the edge DataFrame, driver-side fixpoint
-   loop with localCheckpoint per round (Catalyst cannot express
-   iteration; lineage must be truncated — SURVEY.md §4.3).
+3. **Connected components** (`connected_components`): min-label
+   propagation with a pointer jump over the edge DataFrame, run in
+   driver-side chunks with one localCheckpoint per chunk (Catalyst
+   cannot express iteration; lineage must be truncated — SURVEY.md
+   §4.3) and a verified fixpoint probe; it raises at its iteration cap
+   rather than return a split component.
 
 Reference parity: generalizes the per-column majority-vote entity
 assignment (named_entity_recognizer.py:432-489) from columns to corpus-
@@ -44,6 +46,7 @@ LINK_TYPES = ["PERSON", "ORGANIZATION", "LOCATION"]
 N_BANDS = 16
 MAX_BUCKET = 32
 TAU_STRING = 0.85
+CC_CAP = 64  # connected_components: max pointer-jump iterations
 
 _NORM = "lower(regexp_replace(trim(mention), '\\\\s+', ' '))"
 # tokens that are not middle initials ("q.")
@@ -155,160 +158,83 @@ def score_pairs(
     )
 
 
-def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """Min-label propagation fixpoint: (sid, label). label = min sid of the
-    component. Each round is one join + one agg (one shuffle);
-    localCheckpoint truncates the iterative lineage. Converges in
-    O(diameter) rounds (planted clusters are near-cliques: 2-3)."""
-    sym = edges.select(
-        F.col("sid_a").alias("src"), F.col("sid_b").alias("dst")
-    ).union(edges.select(F.col("sid_b").alias("src"), F.col("sid_a").alias("dst")))
-    sym = sym.localCheckpoint(eager=True)
-    labels = nodes.select("sid", F.col("sid").alias("label")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.src == labels.sid)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        # carry a change flag through the update so convergence is a
-        # filter-count on the (already materialized) checkpoint, not a
-        # second join of new-vs-old labels
-        new_labels = (
-            labels.join(nbr, labels.sid == nbr.dst, "left")
-            .select(
-                "sid",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-                (F.coalesce(F.col("nbr_min"), F.col("label")) < F.col("label"))
-                .alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.where("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    else:
-        # never silent: an abandoned fixpoint splits one real entity into
-        # several labels downstream
-        import warnings
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Connected components of (nodes.sid, edges.sid_a-sid_b) -> (sid,
+    label), one row per node, label = min sid of the component. The one
+    CC loop in the codebase: entity linking, near-dedup, host
+    components and Boruvka's contraction all call it.
 
-        warnings.warn(
-            f"connected_components did not converge within {max_iter}"
-            f" iterations ({changed} labels still changing) — a component"
-            " with diameter > max_iter is returned SPLIT; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
+    Min-label propagation with a POINTER JUMP: each iteration a node
+    takes the min over its neighbors' labels and over the label of its
+    own label (lbl <- lbl[lbl], via the self edge (sid, lbl)). Labels
+    only decrease, so jumping through the current chain converges in
+    about log2(diameter) iterations instead of diameter rounds.
 
+    Iterations run in LAZY chunks, each iteration referencing the label
+    table only TWICE (plan growth 2^chunk per chunk; a third reference
+    measured 3^8 subplan copies: minutes of driver-side analysis on
+    microscopic data), with one localCheckpoint per chunk to reset the
+    lineage. After each chunk a PROBE verifies the fixpoint: the label
+    is constant across every edge (a differing edge would strictly
+    decrease one side next iteration, and edge-constancy makes the
+    pointer jump a no-op too). The min node keeps its own sid, so a
+    constant label is the component min. Chunks run 2, 2, 4, 8, ...
+    iterations up to CC_CAP in total, past which this raises rather
+    than returning a component split in two. Only edge endpoints
+    iterate; isolated nodes label themselves.
 
-def connected_components_twophase(
-    nodes: DataFrame, edges: DataFrame, max_rounds: int = 16
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") -> (sid, label), label = min sid of the component — the
-    SAME contract as `connected_components`, reached in O(log n) rounds
-    instead of O(diameter).
-
-    Why a second CC: min-label propagation costs one shuffle round per
-    hop of graph diameter — the right plan for the near-clique entity
-    blocks and hub-contracted host graphs this repo links (diameter
-    2-4), but a redirect-chain graph, a citation path, or a filament in
-    a similarity graph can have diameter 10^3+, where propagation means
-    10^3 shuffles. The alternating algorithm contracts the graph toward
-    star forests: each round every node hooks its neighborhood onto the
-    neighborhood minimum, roughly halving tree heights, so convergence
-    is logarithmic in component size REGARDLESS of diameter.
-
-    Semantics per round over the canonical edge state (u, v), u > v
-    (child above parent — every undirected edge stored once):
-      * large-star: for each node x, every strictly-LARGER neighbor y
-        re-hooks to m(x) = min(neighborhood(x) U {x}) — one symmetric-
-        adjacency min agg (map-side combines) + one equi-join; the new
-        pair (y, m(x)) is canonical by construction (m(x) <= x < y).
-      * small-star: for each node x, its strictly-SMALLER neighbors and
-        x itself re-hook to m = min(smaller neighbors) — one min agg
-        over the canonical rows (already child-keyed, no symmetric
-        expansion) + one join, self-loop (m, m) dropped.
-    Fixpoint = star forest: no parent is itself a child, checked with
-    ONE left-semi count per round; centers are then exactly the
-    component minima (the paper's invariant), so the output is
-    deterministic and identical to `connected_components` — a pytest
-    asserts equality on a long-path graph both algorithms can solve
-    and on random graphs.
-
-    Scale shape: per round two min aggs (both map-side combine — a hub
-    node's million neighbors arrive at its reducer as one partial per
-    task) + two equi-joins keyed on node ids, distinct() to re-canonicalize
-    (the same dedup every BFS/CC round pays), localCheckpoint per round
-    (Catalyst cannot express iteration; lineage must be truncated). The
-    driver holds one convergence count per round — never an edge."""
-    e = (
-        edges.where(F.col("sid_a") != F.col("sid_b"))
-        .select(
-            F.greatest("sid_a", "sid_b").alias("u"),
-            F.least("sid_a", "sid_b").alias("v"),
-        )
+    Scale shape: per iteration one join + one map-side-combined min agg
+    keyed on node ids; the probe is two joins + isEmpty. The driver
+    holds one boolean per chunk, never an edge."""
+    sym = (
+        edges.select(F.col("sid_a").alias("x"), F.col("sid_b").alias("y"))
+        .unionAll(edges.select(F.col("sid_b").alias("x"),
+                               F.col("sid_a").alias("y")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        # large-star: adjacency min over BOTH orientations
-        adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = adj.groupBy(F.col("u").alias("x")).agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        # every canonical row (y, x) is a larger-neighbor pair of x
-        e = (
-            e.join(mins, e.v == mins.x)
-            .select(F.col("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # small-star: parents of each child re-hook to the child's min parent
-        minsS = e.groupBy("u").agg(F.min("v").alias("m"))
-        ss_children = minsS.select("u", F.col("m").alias("v"))
-        ss_parents = (
-            e.join(minsS, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = (
-            ss_children.union(ss_parents)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # converged iff star forest: no parent is itself a child
-        pending = (
-            e.join(e.select(F.col("u").alias("v2")), e.v == F.col("v2"),
-                   "left_semi")
-            .count()
-        )
-        if pending == 0:
-            break
-    else:
-        import warnings
-
-        warnings.warn(
-            "connected_components_twophase did not reach a star forest"
-            f" within {max_rounds} rounds ({pending} non-star edges) —"
-            " components may be returned SPLIT; raise max_rounds",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    labels = e.select(F.col("u").alias("sid"), F.col("v").alias("label"))
-    return (
-        nodes.join(labels, "sid", "left")
-        .select("sid", F.coalesce("label", "sid").alias("label"))
+    m = sym.select(F.col("x").alias("comp")).distinct().withColumn(
+        "lbl", F.col("comp")
     )
+    done_iters = 0
+    chunk = min(2, CC_CAP)  # near-clique blocks settle in 2 iterations
+    while True:
+        for _ in range(chunk):
+            nbrs = sym.unionAll(
+                m.select(F.col("comp").alias("x"), F.col("lbl").alias("y"))
+            )
+            m = (
+                nbrs.join(
+                    m.select(F.col("comp").alias("y"),
+                             F.col("lbl").alias("ly")),
+                    "y",
+                )
+                .groupBy("x")
+                .agg(F.min("ly").alias("lbl"))
+                .select(F.col("x").alias("comp"), "lbl")
+            )
+        m = m.localCheckpoint(eager=True)
+        done_iters += chunk
+        at_fixpoint = (
+            sym.join(m.select(F.col("comp").alias("x"),
+                              F.col("lbl").alias("lx")), "x")
+            .join(m.select(F.col("comp").alias("y"),
+                           F.col("lbl").alias("ly")), "y")
+            .where(F.col("lx") != F.col("ly"))
+            .isEmpty()
+        )
+        if at_fixpoint:
+            return nodes.select("sid").join(
+                m.select(F.col("comp").alias("sid"), F.col("lbl").alias("label")),
+                "sid", "left",
+            ).select("sid", F.coalesce("label", "sid").alias("label"))
+        if done_iters >= CC_CAP:
+            raise ValueError(
+                "connected_components did not reach a fixpoint within "
+                f"{done_iters} iterations; the graph's diameter exceeds "
+                f"the pointer-jump cap (CC_CAP={CC_CAP})"
+            )
+        chunk = min(done_iters, CC_CAP - done_iters)
 
 
 def _linked_members(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nerpii_spark.functions.hashing import sql_h1
+from nerpii_spark.operators.link import connected_components
 from nerpii_spark.sources.pages import HUB_SALT, N_HUB_HOSTS, N_SITE_HOSTS
 
 _HOST_RE = "https?://([^/]+)"
@@ -313,20 +314,16 @@ def host_components(pages: DataFrame) -> DataFrame:
     numbers are only comparable within a component, and a crawl whose
     host graph fragments into many components usually lost a seed list.
 
-    Scale shape: reuses link.connected_components (min-label propagation,
-    one join + one map-side-combined agg per round, per-round
-    localCheckpoint). Propagation converges in O(diameter) rounds — on
-    HOST graphs that is small by construction (the web's host graph is
-    small-world; here every page links one of 13 hub hosts, so the
-    planted diameter is ~4). For a graph with unbounded diameter the
-    right tool is the pointer-doubling shape (resolve_redirects);
-    min-label is the cheaper plan when diameter is known-small.
+    Scale shape: link.connected_components (min-label propagation with
+    a pointer jump, one join + one map-side-combined agg per iteration,
+    one localCheckpoint per chunk of iterations, verified fixpoint).
+    Pointer jumping converges in about log2(diameter) iterations, and
+    host graphs are small-world anyway (here every page links one of 13
+    hub hosts, so the planted diameter is ~4).
 
     The DuckDB oracle recomputes true components over the PLANTED link
     set via a recursive min-label CTE — an independent formulation, so a
     split or merged component fails the gate."""
-    from nerpii_spark.operators.link import connected_components
-
     e = distinct_host_edges(pages)
     edges = e.select(
         F.col("u").alias("sid_a"), F.col("v").alias("sid_b")
@@ -3485,13 +3482,10 @@ e{r} as materialized (
 # cheap) and drops redundant navigation.
 
 MST_ROUNDS = 6       # outer rounds: components >= halve/round (sf0.1 needs 5; early break when done)
-MST_CC_ROUNDS = 8    # inner min-label rounds contracting merged comps
-MST_CC_CAP = 64      # adaptive-contraction hard cap before raising (r5)
+MST_CC_ROUNDS = 8    # the DuckDB replay's fixed inner min-label budget
 
 
-def boruvka_msf(pages: DataFrame,
-                n_rounds: int = MST_ROUNDS,
-                cc_rounds: int = MST_CC_ROUNDS) -> DataFrame:
+def boruvka_msf(pages: DataFrame, n_rounds: int = MST_ROUNDS) -> DataFrame:
     """Minimum spanning forest -> (a, b, w) selected edges. Weights:
     w = 1e6 div (1 + n_links(a,b)) + 1 over the undirected host graph
     (link multiplicity summed over both directions), ties broken by
@@ -3502,9 +3496,8 @@ def boruvka_msf(pages: DataFrame,
     the edge table carries its endpoint component labels, ONE
     map-side-combined min(struct(w, a, b)) per component selects each
     component's cheapest outgoing edge (proposed from both endpoints),
-    merged components contract via ADAPTIVE-CHUNKED min-label pointer
-    jumping under a verified fixpoint probe (escalating to MST_CC_CAP
-    iterations, raising loudly past the cap), and newly
+    merged components contract via link.connected_components (verified
+    fixpoint, raising loudly past its iteration cap), and newly
     intra-component edges are PRUNED so later rounds scan a
     geometrically shrinking edge set.  pytest pins the planted
     graph's forest == a Python Kruskal ground truth.
@@ -3527,13 +3520,11 @@ def boruvka_msf(pages: DataFrame,
             ).alias("w"),
         )
     )
-    return msf_from_weighted_edges(e, n_rounds=n_rounds,
-                                   cc_rounds=cc_rounds)
+    return msf_from_weighted_edges(e, n_rounds=n_rounds)
 
 
 def msf_from_weighted_edges(weighted: DataFrame,
-                            n_rounds: int = MST_ROUNDS,
-                            cc_rounds: int = MST_CC_ROUNDS) -> DataFrame:
+                            n_rounds: int = MST_ROUNDS) -> DataFrame:
     """Boruvka MSF core over an arbitrary (a, b, w) edge table with
     a < b and a strict (w, a, b) total order — the graph-independent
     seam boruvka_msf delegates to (and the unit-test entry point for
@@ -3550,15 +3541,16 @@ def msf_from_weighted_edges(weighted: DataFrame,
     node-level label table is gone entirely: only edges and comp-level
     maps ever shuffle.
 
-    Contraction is ADAPTIVE with a verified fixpoint (ADVICE r4): the
-    probe guarantees labels are constant per selection-component before
-    any round completes, so the emitted forest can never contain an
-    intra-component (cycle-forming) edge.  DuckDB-oracle parity: the
-    replay runs the FIXED cc_rounds budget, and a verified fixpoint is
+    Contraction is link.connected_components over the component graph
+    of this round's selections: its verified fixpoint guarantees labels
+    are constant per selection-component before any round completes, so
+    the emitted forest can never contain an intra-component
+    (cycle-forming) edge.  DuckDB-oracle parity: the replay runs the
+    FIXED MST_CC_ROUNDS budget, and a verified fixpoint is
     budget-independent (extra iterations are no-ops), so the two agree
     exactly whenever the oracle's budget suffices — verified
     empirically for the contract graphs at all three sf scales by
-    capping escalation at the oracle budget (pytest
+    capping link.CC_CAP at the oracle budget (pytest
     test_boruvka_corpus_converges_within_oracle_budget pins it), while
     a shortfall on other inputs surfaces as a loud check_oracle
     divergence instead of two silently-agreeing wrong answers."""
@@ -3592,85 +3584,20 @@ def msf_from_weighted_edges(weighted: DataFrame,
         picked = sel.select("a", "b", "w")
         forest = (picked if forest is None
                   else forest.unionByName(picked).distinct())
-        # contract: min-label propagation over comp-level selected edges
-        ce = sel.select(F.col("ca").alias("x"), F.col("cb").alias("y"))
-        sym = (
-            ce.unionAll(
-                ce.select(F.col("y").alias("x"), F.col("x").alias("y"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # contraction runs over the COMPONENT graph: m(c) converges to
-        # the min label reachable from c through this round's
-        # selections.  Every comp with a surviving cross edge proposed
-        # an edge, so nodes(sym) covers every comp that needs
+        # contract: connected components of this round's selections
+        # over the COMPONENT graph (m(c) = min comp reachable from c).
+        # Every comp with a surviving cross edge proposed an edge, so
+        # the selection endpoints cover every comp that needs
         # relabeling; untouched comps have no dec edges left either.
-        m = (
-            sym.select(F.col("x").alias("comp")).distinct()
-            .withColumn("lbl", F.col("comp"))
+        ce = sel.select(F.col("ca").alias("sid_a"), F.col("cb").alias("sid_b"))
+        comps = (
+            ce.select(F.col("sid_a").alias("sid"))
+            .union(ce.select("sid_b"))
+            .distinct()
         )
-        # ADAPTIVE-CHUNKED contraction (VERDICT r4 #3 + ADVICE r4): run
-        # chunks of LAZY min-label iterations (each combines the
-        # one-hop neighbor min with a POINTER JUMP lbl <- lbl[lbl];
-        # min-label is monotone so jumping through the current chain
-        # gives log-diameter convergence), checkpoint the chunk, then
-        # PROBE the pinned map for the fixpoint: at fixpoint the label
-        # is constant across every sym edge (a differing edge would
-        # strictly decrease one side next iteration, and edge-constancy
-        # makes the pointer jump a no-op too).  Typical selection
-        # graphs converge inside the first half-budget chunk, so the
-        # common path executes cc_rounds/2 iterations + one tiny probe
-        # join instead of the full fixed budget (pinned-16 re-measure
-        # r5: ~16 s -> single-chunk rounds, see BENCH/BASELINE.md);
-        # adversarial diameters (chain-shaped round-1 selections exist:
-        # test_wave32 chain gate) ESCALATE with doubling chunks up to
-        # MST_CC_CAP total iterations before raising — stronger than
-        # the old silent fixed budget, whose shortfall the DuckDB
-        # oracle (same budget) could never surface.  Each iteration
-        # references m only TWICE, keeping lazy-plan growth at
-        # 2^chunk per chunk (a third reference measured 3^8 subplan
-        # copies: minutes of driver-side analysis on microscopic
-        # data); the checkpoint between chunks resets the depth.
-        done_iters = 0
-        chunk = max(1, cc_rounds // 2)
-        while True:
-            for _i in range(chunk):
-                edges = sym.unionAll(
-                    m.select(F.col("comp").alias("x"),
-                             F.col("lbl").alias("y"))
-                )
-                m = (
-                    edges.join(
-                        m.select(F.col("comp").alias("y"),
-                                 F.col("lbl").alias("ly")),
-                        "y",
-                    )
-                    .groupBy("x")
-                    .agg(F.min("ly").alias("lbl"))
-                    .select(F.col("x").alias("comp"), "lbl")
-                )
-            m = m.localCheckpoint(eager=True)
-            done_iters += chunk
-            at_fixpoint = (
-                sym.join(m.select(F.col("comp").alias("x"),
-                                  F.col("lbl").alias("lx")), "x")
-                .join(m.select(F.col("comp").alias("y"),
-                               F.col("lbl").alias("ly")), "y")
-                .where(F.col("lx") != F.col("ly"))
-                .isEmpty()
-            )
-            if at_fixpoint:
-                break
-            if done_iters >= MST_CC_CAP:
-                raise ValueError(
-                    "msf_from_weighted_edges: min-label contraction did "
-                    f"not reach a fixpoint within {done_iters} "
-                    "iterations; the selection-path diameter of this "
-                    "edge table exceeds the pointer-jump cap "
-                    f"(MST_CC_CAP={MST_CC_CAP})"
-                )
-            chunk = min(done_iters, MST_CC_CAP - done_iters)
+        m = connected_components(comps, ce).select(
+            F.col("sid").alias("comp"), F.col("label").alias("lbl")
+        )
         # prune + re-decorate: map the surviving edges' comps through
         # the comp-level contraction and DROP newly intra-component
         # edges, so the next round's argmin scans only what can still

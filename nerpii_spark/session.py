@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's RAM, capped at 24g. In local mode the driver JVM
+    runs every task, and a heap allowed to outgrow the machine gets the
+    whole process OOM-killed mid-run instead of collecting garbage."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = int(f.readline().split()[1])  # MemTotal
+    except (OSError, ValueError, IndexError):
+        return "24g"
+    return f"{max(1, min(24, total_kb // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "nerpii_spark",
     cores: int | None = None,
@@ -33,7 +45,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("NERPII_SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("NERPII_SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -38,18 +38,19 @@ def _kruskal(edges):
 
 def test_boruvka_corpus_converges_within_oracle_budget(spark):
     """DuckDB-oracle parity guard: the SQL replay contracts with a
-    FIXED cc_rounds=8 budget while Spark escalates adaptively, so the
-    two agree only when the contract graph converges within 8 inner
-    iterations per round.  Capping the escalation at the oracle budget
-    must therefore complete without raising (verified at all three sf
+    FIXED MST_CC_ROUNDS=8 budget while Spark's contraction
+    (link.connected_components) escalates adaptively, so the two agree
+    only when the contract graph converges within 8 inner iterations
+    per round.  Capping the escalation at the oracle budget must
+    therefore complete without raising (verified at all three sf
     scales in r5; this pins the cheapest one)."""
-    old_cap = WG.MST_CC_CAP
-    WG.MST_CC_CAP = WG.MST_CC_ROUNDS
+    old_cap = L.CC_CAP
+    L.CC_CAP = WG.MST_CC_ROUNDS
     try:
         pages = E._pipeline(spark, SF)["pages"]
         assert WG.boruvka_msf(pages).count() > 0
     finally:
-        WG.MST_CC_CAP = old_cap
+        L.CC_CAP = old_cap
 
 
 def test_boruvka_equals_kruskal_on_corpus(spark):

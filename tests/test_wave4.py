@@ -1,7 +1,5 @@
-"""Wave-4 operators: two-phase CC, fixed-point log2 + weighted
+"""Wave-4 operators: connected components, fixed-point log2 + weighted
 reservoir sampling, Dice collocations, triple domain/range typecheck."""
-
-import warnings
 
 import duckdb
 import pytest
@@ -15,10 +13,7 @@ from nerpii_spark.functions.intmath import (
     log2fp,
     spark_log2fp_cols,
 )
-from nerpii_spark.operators.link import (
-    connected_components,
-    connected_components_twophase,
-)
+from nerpii_spark.operators import link as L
 
 
 def _graph(spark, n, edge_list):
@@ -32,24 +27,47 @@ def _graph(spark, n, edge_list):
     return nodes, edges
 
 
-def test_twophase_cc_long_path(spark):
-    # an 80-node path: diameter 79 — min-label propagation needs 79
-    # rounds; the alternating algorithm must finish in far fewer
-    nodes, edges = _graph(spark, 80, [(i, i + 1) for i in range(79)])
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        out = connected_components_twophase(nodes, edges, max_rounds=12)
-        got = {r["sid"]: r["label"] for r in out.collect()}
-    assert got == {f"n{i:03d}": "n000" for i in range(80)}
+def _union_find(n, edge_list):
+    """Pure-Python ground truth: {sid: min sid of its component}."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # root = component min
+    return {f"n{i:03d}": f"n{find(i):03d}" for i in range(n)}
 
 
-def test_twophase_cc_warns_when_budget_too_small(spark):
+def _cc(spark, n, edge_list):
+    nodes, edges = _graph(spark, n, edge_list)
+    return {
+        r["sid"]: r["label"]
+        for r in L.connected_components(nodes, edges).collect()
+    }
+
+
+def test_cc_long_path_equals_union_find(spark):
+    # an 80-node path: diameter 79 — one-hop propagation would need 79
+    # rounds; the pointer jump converges in about log2(79) iterations
+    edge_list = [(i, i + 1) for i in range(79)]
+    assert _cc(spark, 80, edge_list) == _union_find(80, edge_list)
+
+
+def test_cc_raises_when_cap_too_small(spark, monkeypatch):
+    # a 64-node path needs more than 4 pointer-jump iterations: with the
+    # cap below that the loop must raise, never return a split component
+    monkeypatch.setattr(L, "CC_CAP", 4)
     nodes, edges = _graph(spark, 64, [(i, i + 1) for i in range(63)])
-    with pytest.warns(RuntimeWarning, match="star forest"):
-        connected_components_twophase(nodes, edges, max_rounds=1)
+    with pytest.raises(ValueError, match="did not reach a fixpoint"):
+        L.connected_components(nodes, edges)
 
 
-def test_twophase_cc_equals_minlabel_random(spark):
+def test_cc_random_graph_equals_union_find(spark):
     # seeded LCG random graph: several components, isolated nodes
     n, s, edge_list = 120, 7, []
     for _ in range(140):
@@ -59,24 +77,12 @@ def test_twophase_cc_equals_minlabel_random(spark):
         b = s % n
         if a != b:
             edge_list.append((a, b))
-    nodes, edges = _graph(spark, n, edge_list)
-    ref = {
-        r["sid"]: r["label"]
-        for r in connected_components(nodes, edges, max_iter=100).collect()
-    }
-    got = {
-        r["sid"]: r["label"]
-        for r in connected_components_twophase(nodes, edges).collect()
-    }
-    assert got == ref
+    assert _cc(spark, n, edge_list) == _union_find(n, edge_list)
 
 
-def test_twophase_cc_isolated_and_pair(spark):
-    nodes, edges = _graph(spark, 3, [(1, 2)])
-    got = {
-        r["sid"]: r["label"]
-        for r in connected_components_twophase(nodes, edges).collect()
-    }
+def test_cc_isolated_and_pair(spark):
+    got = _cc(spark, 3, [(1, 2)])
+    assert got == _union_find(3, [(1, 2)])
     assert got == {"n000": "n000", "n001": "n001", "n002": "n001"}
 
 

@@ -63,6 +63,15 @@ def run_level(cores: int, attempts: int | None = None) -> dict:
 def main() -> int:
     low = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     high = int(sys.argv[2]) if len(sys.argv) > 2 else 16
+    # taskset -c 0-15 exits 0 on a 4-CPU host and silently pins the
+    # "16-core" level to 4 CPUs, so the efficiency would be wrong
+    avail = len(os.sched_getaffinity(0))
+    if max(low, high) > avail:
+        sys.stderr.write(
+            f"bench_scaling: level {max(low, high)} exceeds the {avail}"
+            " CPUs this process may run on; pass levels <= that\n"
+        )
+        return 2
     r_low = run_level(low)
     r_high = run_level(high)
     tp_low = r_low["triples_per_sec"]

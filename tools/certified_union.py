@@ -18,11 +18,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE = os.path.join(REPO, "tests", "fixtures", "CERTIFIED_UNION.json")
 
 
+def _round_no(path: str) -> int:
+    """CORRECTNESS_r11.json -> 11 (numeric, so r100 sorts after r11)."""
+    return int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
+
+
 def certified_union() -> tuple[list[str], list[str]]:
-    """(sorted certified names, sorted rounds consumed)."""
-    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+    """(sorted certified names, rounds consumed in round order)."""
+    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
+                   key=_round_no)
     latest: dict[str, dict] = {}
-    for path in files:  # sorted => later rounds overwrite earlier rows
+    for path in files:  # round order => later rounds overwrite earlier rows
         with open(path) as f:
             for name, row in json.load(f).items():
                 latest[name] = row

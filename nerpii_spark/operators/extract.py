@@ -139,7 +139,7 @@ def extract_triples_inline(
 
     Mention pairing is sentence-local — every candidate pair lives inside a
     single input row — so running cleaning, detection and rule matching in
-    the same Arrow-batched mapInPandas task avoids (a) the self-join's
+    the same Arrow-batched mapInArrow task avoids (a) the self-join's
     double computation of the detector stage and its shuffle, and (b) a
     second Arrow round trip for a separate clean UDF stage (when the input
     still carries `html`, the byte-identical clean function is applied
@@ -148,10 +148,10 @@ def extract_triples_inline(
     `mentions` table.
     """
     # late imports: detect/clean must not import extract
+    import pyarrow as pa
+
     from .clean import clean_html_bytes
     from .detect import scan_text
-
-    import pandas as pd
 
     id_cols = [c for c in id_cols if c in pages.columns]
     schema = (
@@ -164,31 +164,40 @@ def extract_triples_inline(
     in_cols = [*id_cols, *(["html"] if has_html else []), "text"]
 
     out_cols = ["subj", "pred", "obj", "score"]
+    out_types = [pa.string(), pa.string(), pa.string(), pa.float64()]
 
     def run(batches):
-        # columnar assembly (see detect.scan_batches): dict-of-lists beats
-        # DataFrame-from-row-tuples several-fold in the hot path
-        for pdf in batches:
-            cols: dict[str, list] = {c: [] for c in (*id_cols, *out_cols)}
-            ids = pdf[list(id_cols)].itertuples(index=False, name=None)
-            htmls = pdf["html"].tolist() if has_html else [None] * len(pdf)
-            for id_vals, html, text in zip(ids, htmls, pdf["text"].tolist()):
+        # columnar assembly in Arrow: only html/text become Python
+        # objects; the id columns of the rows that yield triples are
+        # gathered with one `take` (this closure is the hottest Python in
+        # the engine)
+        for batch in batches:
+            rows: list[int] = []
+            cols: list[list] = [[] for _ in out_cols]
+            htmls = (
+                batch.column("html").to_pylist() if has_html
+                else [None] * batch.num_rows
+            )
+            texts = batch.column("text").to_pylist()
+            for i, (html, text) in enumerate(zip(htmls, texts)):
                 if html is not None:
-                    text = clean_html_bytes(bytes(html))
+                    text = clean_html_bytes(html)
                 if not text:
                     continue
                 trs = match_rules(scan_text(text))
                 if not trs:
                     continue
-                for c, v in zip(id_cols, id_vals):
-                    cols[c].extend([v] * len(trs))
-                for j, c in enumerate(out_cols):
-                    col = cols[c]
+                rows.extend([i] * len(trs))
+                for j, col in enumerate(cols):
                     for tr in trs:
                         col.append(tr[j])
-            yield pd.DataFrame(cols)
+            ids = batch.select(id_cols).take(pa.array(rows, pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                [*ids.columns, *map(pa.array, cols, out_types)],
+                names=[*id_cols, *out_cols],
+            )
 
-    return pages.select(*in_cols).mapInPandas(run, schema=schema)
+    return pages.select(*in_cols).mapInArrow(run, schema=schema)
 
 
 def triples_by_pred_salted(triples: DataFrame, n_salt: int = 16) -> DataFrame:

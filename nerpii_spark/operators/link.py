@@ -178,10 +178,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     is constant across every edge (a differing edge would strictly
     decrease one side next iteration, and edge-constancy makes the
     pointer jump a no-op too). The min node keeps its own sid, so a
-    constant label is the component min. Chunks run 2, 2, 4, 8, ...
+    constant label is the component min. Chunks run 2, 2, 4, 8, 8, ...
     iterations up to CC_CAP in total, past which this raises rather
-    than returning a component split in two. Only edge endpoints
-    iterate; isolated nodes label themselves.
+    than returning a component split in two. Capping a chunk at 8 bounds
+    the lazy plan at 2^8 subplan copies however long the loop runs. Only
+    edge endpoints iterate; isolated nodes label themselves.
 
     Scale shape: per iteration one join + one map-side-combined min agg
     keyed on node ids; the probe is two joins + isEmpty. The driver
@@ -234,7 +235,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                 f"{done_iters} iterations; the graph's diameter exceeds "
                 f"the pointer-jump cap (CC_CAP={CC_CAP})"
             )
-        chunk = min(done_iters, CC_CAP - done_iters)
+        # at most 8 lazy iterations (2^8 subplan copies) per checkpoint
+        chunk = min(done_iters, 8, CC_CAP - done_iters)
 
 
 def _linked_members(

@@ -232,12 +232,15 @@ def decode_media(payload: bytes, kind: str):
 def _decode_bmp(payload: bytes):
     """Parse an uncompressed 24-bit BMP; None if the payload is not one.
     Validation mirrors the DuckDB oracle bit-for-bit: magic, file size,
-    BITMAPINFOHEADER size 40, bpp 24, compression 0, and the padded pixel
-    region exactly filling the file."""
+    BITMAPINFOHEADER size 40, bpp 24, compression 0, positive width and
+    height, and the padded pixel region exactly filling the file. Width
+    and height are read unsigned, as the oracle reads them, so a header
+    dimension >= 2^31 is rejected on both sides by the same fill check
+    (not here as a negative number and there as a huge one)."""
     if len(payload) < 54 or payload[:2] != b"BM":
         return None
     (file_size,) = struct.unpack_from("<I", payload, 2)
-    (hdr_size, width, height) = struct.unpack_from("<Iii", payload, 14)
+    (hdr_size, width, height) = struct.unpack_from("<III", payload, 14)
     (bpp,) = struct.unpack_from("<H", payload, 28)
     (compression,) = struct.unpack_from("<I", payload, 30)
     if (

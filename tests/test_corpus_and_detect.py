@@ -136,6 +136,39 @@ def test_clean_html_edge_cases():
     assert clean_html_bytes(b"<style >c{}</style >ok") == "ok"
 
 
+def test_builtin_patterns_have_scan_prefix():
+    """Every built-in detector regex except the '@'-guarded EMAIL, and
+    SENT_SPLIT, compiles with a literal or charset prefix, so `re` skips
+    ahead to candidate positions instead of trying a full match at every
+    character. A leading \\b or lookbehind silently loses this."""
+    try:
+        from re import _compiler, _constants, _parser
+
+        compile_info = _compiler._compile_info
+        parse = _parser.parse
+        scannable = _constants.SRE_INFO_PREFIX | _constants.SRE_INFO_CHARSET
+    except (ImportError, AttributeError) as e:
+        pytest.skip(f"re's private compiler API is not available: {e}")
+    from nerpii_spark.operators.detect import (
+        SENT_SPLIT, build_detectors, compile_detectors,
+    )
+
+    rxs = {"sent_split": SENT_SPLIT}
+    for lang in ("en", "it"):
+        for d in compile_detectors(build_detectors(lang=lang)):
+            if d[3] != "regex_email":
+                rxs[d[3]] = d[1]
+    no_prefix = []
+    for name, rx in rxs.items():
+        parsed = parse(rx.pattern, rx.flags)
+        code: list = []
+        compile_info(code, parsed, parsed.state.flags)
+        # INFO block layout: [INFO, skip, mask, ...]
+        if not code[2] & scannable:
+            no_prefix.append(name)
+    assert no_prefix == []
+
+
 def test_detector_registry_seam(spark):
     """The analyzer is built from registrations (reference
     set_presidio_analyzer/set_model seam, named_entity_recognizer.py:

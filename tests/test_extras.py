@@ -238,6 +238,44 @@ def test_media_decode_real_bmp_wav():
         MM.decode_media(wav[:-2], "audio")
 
 
+def test_media_decode_rejects_top_bit_width_like_oracle():
+    """A BMP header whose width has the top bit set (0x80000000) is
+    rejected by decode_media and by the DuckDB oracle alike: both read
+    the width unsigned, and the pixel region cannot fill the file."""
+    import struct
+
+    import duckdb
+
+    good = _golden_bmp(21)
+    bad = good[:18] + struct.pack("<I", 0x80000000) + good[22:]
+    with pytest.raises(NotImplementedError):
+        MM.decode_media(bad, "image")
+    media = MM.media_sql("duck", "docs")
+    oracle = MM.duck_features_sql("docs")
+    assert media in oracle
+    con = duckdb.connect()
+    try:
+        con.execute("create table docs as select 21::bigint as doc_id,"
+                    " 'plain text' as text")
+        con.execute(
+            "create table crafted as select 21::bigint as doc_id,"
+            " 'image' as kind, ?::blob as payload,"
+            " struct_pack(width := 1, height := 1, duration_ms := 1000) as meta",
+            [good],
+        )
+        con.execute("insert into crafted select 42, kind, ?::blob, meta"
+                    " from crafted", [bad])
+        con.execute("insert into docs values (42, 'plain text')")
+        rows = con.sql(
+            oracle.replace(media, "select * from crafted")
+            + " order by doc_id"
+        ).fetchall()
+    finally:
+        con.close()
+    # (doc_id, kind, n_bytes, head_hash, n_frames, decoded_w, ...)
+    assert [(r[0], r[5]) for r in rows] == [(21, 1 + 21 % 4), (42, 0)]
+
+
 def test_media_feature_plumbing(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs.createOrReplaceTempView("m_documents")

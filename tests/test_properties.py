@@ -104,6 +104,190 @@ def test_trie_alt_matches_length_sorted_alternation(words, text):
     assert a == b
 
 
+_WORD_CHARS = "abAB1_é"
+_TAILS = (r"\b", r" (?:[A-Z]\. )?[A-Z][a-z]+\b", "", "a")
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.lists(
+                st.tuples(
+                    st.sampled_from(_WORD_CHARS),
+                    st.text(alphabet=_WORD_CHARS + " ./", max_size=4),
+                ).map("".join),
+                min_size=1,
+                max_size=8,
+            ),
+            st.sampled_from(_TAILS),
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    st.sampled_from([None, "C/", "a", "/b"]),
+    st.text(alphabet=_WORD_CHARS + " ./-BC\n", max_size=80),
+)
+def test_word_alt_matches_word_boundary_alternation(groups, literal, text):
+    # _word_alt moves each group's leading \b past the first character:
+    # identical finditer spans to the \b-prefixed trie alternations,
+    # groups tried in order, the literal last and without a boundary
+    import re
+
+    from nerpii_spark.operators.detect import _trie_alt, _word_alt
+
+    old = "|".join(rf"\b{_trie_alt(words)}{tail}" for words, tail in groups)
+    if literal:
+        old += "|" + re.escape(literal)
+    new = re.compile(_word_alt(groups, literal))
+    a = [m.span() for m in re.finditer(old, text)]
+    b = [m.span() for m in new.finditer(text)]
+    assert a == b
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(alphabet="aQZ. !?\n\t", max_size=60))
+def test_sent_split_matches_lookbehind_first_form(text):
+    # SENT_SPLIT starts with a consumed \s; it must split exactly like the
+    # lookbehind-first pattern it replaces
+    import re
+
+    from nerpii_spark.operators.detect import SENT_SPLIT
+
+    assert SENT_SPLIT.split(text) == re.split(r"(?<=[.!?])(?<!\s[A-Z]\.)\s+", text)
+
+
+def _frozen_detector_patterns() -> dict[str, str]:
+    """The built-in detector patterns as they were before they were
+    rewritten to start with a consumed character: the reference for
+    test_scan_text_equals_frozen_patterns, keyed by detector name."""
+    from nerpii_spark.functions import gazetteers as G
+    from nerpii_spark.operators.detect import _trie_alt
+
+    person = r" (?:[A-Z]\. )?[A-Z][a-z]+\b"
+    firsts = G.FIRST_NAMES + [n.upper() for n in G.FIRST_NAMES]
+    it_firsts = G.IT_FIRST_NAMES + [n.upper() for n in G.IT_FIRST_NAMES]
+    deny = [w for w in G.ADDRESS_DENY_LIST if w != "C/"]
+    org = (
+        rf"\b[A-Z][a-z]+ {_trie_alt(G.ORG_SUFFIXES)}\b"
+        r"|\bUniversity of [A-Z][a-z]+\b"
+    )
+    return {
+        "regex_email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
+        "regex_url": r"https?://[^\s<>\"']+",
+        "regex_phone": (
+            r"\(\d{3}\) \d{3}-\d{4}|(?<![\d-])\d{3}-\d{3}-\d{4}(?![\d-])"
+        ),
+        "regex_ssn": r"(?<![\d-])\d{3}-\d{2}-\d{4}(?![\d-])",
+        "regex_luhn": r"(?<![\d-])\d{13,16}(?![\d-])",
+        "regex_zip": r"(?<![\d/.-])\d{5}(?![\d-])",
+        "denylist_address": rf"\b{_trie_alt(deny)}\b|C/",
+        "gazetteer_person": rf"\b{_trie_alt(firsts)}{person}",
+        "gazetteer_location": (
+            rf"\b{_trie_alt(G.CITIES + G.STATES + G.COUNTRIES)}\b"
+            rf"|\b{_trie_alt(G.STATE_ABBR)}\b"
+        ),
+        "pattern_org": org,
+        "gazetteer_person_it": rf"\b{_trie_alt(it_firsts)}{person}",
+        "gazetteer_location_it": rf"\b{_trie_alt(G.IT_CITIES + G.COUNTRIES)}\b",
+        "pattern_org_it": org,
+    }
+
+
+def _reference_scan(text: str, dets: list) -> list[tuple]:
+    """scan_text without guards or caching, over the frozen sentence
+    split: every detector runs on every sentence."""
+    import re
+
+    out = []
+    pos = 0
+    for sid, seg in enumerate(re.split(r"(?<=[.!?])(?<!\s[A-Z]\.)\s+", text)):
+        start = text.index(seg, pos)
+        pos = start + len(seg)
+        markers = (" works at " in seg, " lives at " in seg, " in " in seg)
+        for etype, rx, score, det, needs_luhn, _guard in dets:
+            for m in re.finditer(rx, seg):
+                if needs_luhn and not luhn_valid(m.group(0)):
+                    continue
+                out.append((sid, etype, m.group(0), start + m.start(),
+                            start + m.end(), score, det, *markers))
+    return out
+
+
+def test_scan_text_equals_frozen_patterns():
+    """scan_text with the rewritten patterns == the pre-rewrite patterns,
+    exactly, with both analyzers, over the planted pages of doc ids
+    0-499 (the planted content of the sf0.01 corpus, behind generated
+    lowercase filler) plus the Italian tabular fixture's rows as
+    sentences."""
+    from nerpii_spark.operators.detect import (
+        build_detectors, compile_detectors, scan_text,
+    )
+    from nerpii_spark.sources import pages as P
+
+    filler = "spark window merge table column the a scan batch key".split()
+    docs = [
+        (i, " ".join(filler[(i + j) % len(filler)] for j in range(8 + i % 40)),
+         ("en", "zh", "es", "fr", "de")[i % 5])
+        for i in range(500)
+    ]
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "create table documents (doc_id bigint, text varchar, lang varchar)"
+        )
+        con.executemany("insert into documents values (?, ?, ?)", docs)
+        texts = [r[0] for r in con.sql(
+            f"select text from ({P.pages_sql('duck')}) order by doc_id"
+        ).fetchall()]
+        texts += [
+            ". ".join(str(v) for v in row) + "."
+            for row in con.sql(P.personal_info_it_sql("duck")).fetchall()
+        ]
+    finally:
+        con.close()
+    frozen = _frozen_detector_patterns()
+    for lang in ("en", "it"):
+        dets = compile_detectors(build_detectors(lang=lang))
+        ref = [(e, frozen[n], s, n, luhn, g) for e, _rx, s, n, luhn, g in dets]
+        new = [scan_text(t, dets) for t in texts]
+        assert new == [_reference_scan(t, ref) for t in texts]
+        # the corpus exercises every detector
+        assert {m[6] for ms in new for m in ms} == {d[3] for d in dets}
+
+
+_SCAN_TOKENS = (
+    "Alice", "ALICE", "Giulia", "Q.", "Smith", "Paris", "Roma", "CA", "Via",
+    "Street", "C/", "Acme", "Corp", "University", "of", "works at",
+    "lives at", "in", "a@b.co", "http://x.y", "(555) 123-4567",
+    "555-123-4567", "123-45-6789", "4111111111111111", "12345", "45", "-",
+    "/", ".",
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(_SCAN_TOKENS), st.sampled_from(["", " ", "-", ". "])
+        ).map("".join),
+        max_size=14,
+    ).map("".join),
+    st.sampled_from(["en", "it"]),
+)
+def test_scan_text_equals_frozen_patterns_on_random_texts(text, lang):
+    # the same reference as above, on texts that put digits, hyphens,
+    # slashes and gazetteer words next to each other in every order
+    from nerpii_spark.operators.detect import (
+        build_detectors, compile_detectors, scan_text,
+    )
+
+    frozen = _frozen_detector_patterns()
+    dets = compile_detectors(build_detectors(lang=lang))
+    ref = [(e, frozen[n], s, n, luhn, g) for e, _rx, s, n, luhn, g in dets]
+    assert scan_text(text, dets) == _reference_scan(text, ref)
+
+
 def test_survey_and_driver_contract_in_sync():
     """SURVEY.md §2 is the judge's coverage checklist: every registered
     driver query must appear there and vice versa, and EVERY query needs

@@ -67,6 +67,34 @@ def test_cc_raises_when_cap_too_small(spark, monkeypatch):
         L.connected_components(nodes, edges)
 
 
+def test_cc_chunks_capped_at_8_past_16_iterations(spark, monkeypatch):
+    # with the fixpoint probe forced false the loop runs to CC_CAP: every
+    # chunk of lazy iterations between two checkpoints stays <= 8 (the
+    # plan holds 2^chunk subplan copies), and the cap still raises
+    nodes, edges = _graph(spark, 3, [(0, 1), (1, 2)])
+    df_cls = type(edges)
+    chunks, iters = [], [0]
+    group_by, checkpoint = df_cls.groupBy, df_cls.localCheckpoint
+
+    def counting_group_by(self, *cols):
+        iters[0] += 1
+        return group_by(self, *cols)
+
+    def recording_checkpoint(self, *args, **kwargs):
+        chunks.append(iters[0])
+        iters[0] = 0
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "groupBy", counting_group_by)
+    monkeypatch.setattr(df_cls, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(df_cls, "isEmpty", lambda self: False)
+    monkeypatch.setattr(L, "CC_CAP", 26)
+    with pytest.raises(ValueError, match="within 26 iterations"):
+        L.connected_components(nodes, edges)
+    # the first checkpoint is the symmetric edge table, before any chunk
+    assert chunks[1:] == [2, 2, 4, 8, 8, 2]
+
+
 def test_cc_random_graph_equals_union_find(spark):
     # seeded LCG random graph: several components, isolated nodes
     n, s, edge_list = 120, 7, []
